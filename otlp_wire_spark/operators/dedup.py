@@ -16,6 +16,9 @@ Scale notes:
 - ngram-Jaccard all-pairs is O(n²) — correctness oracle ONLY; the scale
   path is minhash_lsh: O(n · bands) shuffle, candidates ∝ true near-dups,
   verified by exact Jaccard on the (tiny) candidate set (near_dup_pairs).
+- the all-pairs kernels end in ONE explicit-count exchange (_pair_exchange)
+  so a caller's global sort samples it instead of re-running the O(n²)
+  scoring; jaccard_pairs and near_dup_pairs share one verify (_jaccard_q4).
 - LSH self-join keys are (band_idx, band_signature) — high cardinality, no
   skew; hot buckets (boilerplate pages) are pre-capped by a window BEFORE
   aggregation, truncation observable via Observation.
@@ -54,6 +57,7 @@ def _jvm_tokens(t: object) -> list[str]:
     return [x for x in _JVM_WS.split(t) if x]
 
 from otlp_wire_spark.functions.fnv import fnv64a_expr
+from otlp_wire_spark.operators.parse import _pushdown_barrier
 
 # last near_dup_pairs(persist=True) shingle cache — retired on the next
 # call so unreachable caches stay bounded at one generation
@@ -518,6 +522,44 @@ def segment_dedup(
     )
 
 
+def _pair_sides(sh: DataFrame) -> list[DataFrame]:
+    """``(id_s, sh_s)`` pair-join sides, s ∈ {a, b}, over non-empty rows."""
+    sh = sh.where(F.size("sh") > 0)
+    return [sh.selectExpr(f"id AS id_{s}", f"sh AS sh_{s}") for s in "ab"]
+
+
+def _set_sizes(df: DataFrame, *sides: str) -> DataFrame:
+    """Adds ``m_s`` = distinct-set size of ``sh_s`` per side s. Place it where
+    it runs fewest times: per row below an all-pairs join (pairs ≫ rows),
+    per candidate above near_dup_pairs' candidate join (rows ≫ candidates)."""
+    return df.selectExpr("*", *[f"size(array_distinct(sh_{s})) AS m_{s}" for s in sides])
+
+
+def _jaccard_q4(joined: DataFrame, threshold: float) -> DataFrame:
+    """The ONE Jaccard verify: ``(id_a, id_b, sh_a, sh_b, m_a, m_b)`` →
+    ``(id_a, id_b, jaccard_q4)`` for pairs with Jaccard ≥ threshold.
+    |A∪B| = m_a + m_b − |A∩B| for any arrays (intersect and distinct treat
+    elements, null included, as sets): bit-identical to size(array_union).
+    The intersection is barriered (else PushDownPredicate re-runs it in the
+    filter); the threshold compares the raw ratio, the output is floored
+    ×10⁴ (Spark/DuckDB round() disagree on small-int ratio half-boundaries)."""
+    inter = _pushdown_barrier(F.size(F.array_intersect("sh_a", "sh_b")))
+    staged = joined.select("id_a", "id_b", "m_a", "m_b", inter.alias("_i"))
+    jac = F.col("_i") / (F.col("m_a") + F.col("m_b") - F.col("_i"))
+    return staged.where(jac >= threshold).select(
+        "id_a", "id_b", F.floor(jac * F.lit(10000.0)).cast("long").alias("jaccard_q4")
+    )
+
+
+def _pair_exchange(pairs: DataFrame) -> DataFrame:
+    """The all-pairs tail: one hash exchange on ``id_a``. A global sort's
+    range sampler re-runs its child down to the nearest exchange, so a
+    caller's orderBy reads this shuffle instead of re-scoring every pair.
+    The explicit count (cores, no more) keeps AQE from removing it."""
+    p = pairs.sparkSession.sparkContext.defaultParallelism
+    return pairs.repartition(p, "id_a")
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -526,29 +568,12 @@ def jaccard_pairs(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard ≥ threshold. O(n²) — oracle/test path;
-    use minhash_lsh_candidates at scale."""
-    sh = _shingled(df, id_col, text_col, n).where(F.size("sh") > 0)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = inter / union
-    # jaccard emitted floor-quantized (×10⁴): ratios of small ints land on
-    # decimal half-boundaries where Spark/DuckDB round() disagree; the
-    # threshold compares the raw ratio (identical doubles both engines)
-    # single evaluation per pair: threshold filter and quantized output
-    # read one barriered alias (see near_dup_pairs — same duplication)
-    from otlp_wire_spark.operators.parse import _pushdown_barrier
-
-    staged = a.join(b, F.col("a.id") < F.col("b.id")).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        _pushdown_barrier(jac).alias("_jac"),
-    )
-    return staged.where(F.col("_jac") >= threshold).select(
-        "id_a",
-        "id_b",
-        F.floor(F.col("_jac") * F.lit(10000.0)).cast("long").alias("jaccard_q4"),
-    )
+    use minhash_lsh_candidates at scale. Each pair is scored once: by the
+    shared verify (_jaccard_q4), then _pair_exchange, so a caller's orderBy
+    samples the exchange instead of re-running the nested loop."""
+    a, b = _pair_sides(_shingled(df, id_col, text_col, n))
+    joined = _set_sizes(a, "a").join(_set_sizes(b, "b"), F.col("id_a") < F.col("id_b"))
+    return _pair_exchange(_jaccard_q4(joined, threshold))
 
 
 def _band_rows_from_sig(sigd: DataFrame, bands: int, r: int) -> DataFrame:
@@ -633,8 +658,6 @@ def lsh_pairs_from_bands(
     pipeline must surface. Capped buckets diverge from the uncapped exact
     oracle by design; size the cap so truncation only hits boilerplate.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy("band", "band_sig").orderBy("id")
     ranked = banded.withColumn("_rn", F.row_number().over(w))
     if observation is not None:
@@ -799,33 +822,10 @@ def near_dup_pairs(
         df, id_col, text_col, k, bands, n, bucket_cap, observation, impl,
         shingles=shingles,
     )
-    sh = shingles.where(F.size("sh") > 0)
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    a, b = _pair_sides(shingles)
+    # no _pair_exchange: scoring already sits above the candidate shuffle
     joined = cand.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = inter / union
-    # ONE evaluation of the intersect/union pair per candidate (r6): the
-    # ratio is referenced by the threshold filter AND the quantized output
-    # — unbarriered, PushDownPredicate substitutes it into the pushed
-    # predicate and the projection recomputes it for survivors (Catalyst
-    # does not CSE across filter/project). Identity wrapper, same doubles.
-    from otlp_wire_spark.operators.parse import _pushdown_barrier
-
-    staged = joined.select(
-        "id_a", "id_b", _pushdown_barrier(jac).alias("_jac")
-    )
-    return (
-        staged.where(F.col("_jac") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            F.floor(F.col("_jac") * F.lit(10000.0))
-            .cast("long")
-            .alias("jaccard_q4"),
-        )
-    )
+    return _jaccard_q4(_set_sizes(joined, "a", "b"), threshold)
 
 
 def simhash16_col(text: Column) -> Column:
@@ -928,7 +928,8 @@ def embedding_cosine_pairs(
     """Embedding near-dup pairs: cosine ≥ threshold, exact all-pairs.
 
     O(n²) — the scale path buckets by LSH first (similarity.py); this exact
-    kernel then verifies candidates only.
+    kernel then verifies candidates only. Ends in _pair_exchange (like
+    jaccard_pairs), so a caller's orderBy does not re-run the scoring.
 
     The per-vector norm is computed ONCE PER ROW below the self-join (r6):
     inlined into the pair expression it re-ran the interpreted HOF
@@ -952,9 +953,7 @@ def embedding_cosine_pairs(
     cos = dot / (F.col("a.nv") * F.col("b.nv"))
     # barrier: the threshold filter otherwise pushes below this projection
     # and re-runs the (interpreted HOF) dot aggregate per pair
-    from otlp_wire_spark.operators.parse import _pushdown_barrier
-
-    return (
+    return _pair_exchange(
         a.join(b, F.col("a.id") < F.col("b.id"))
         .select(
             F.col("a.id").alias("id_a"),

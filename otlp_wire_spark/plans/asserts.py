@@ -6,11 +6,31 @@ own compositions."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_nodes(df: DataFrame) -> Iterator:
+    """Every node of ``df``'s executed physical plan, through AQE query
+    stages and into cached relations' plans and subqueries. Read node
+    fields (metrics, scan paths) here rather than matching the plan
+    string, which cuts metadata at spark.sql.maxMetadataStringLength."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        yield node
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        for kids in (node.children(), node.innerChildren()):
+            stack += [kids.apply(i) for i in range(kids.size())]
 
 
 def assert_no_python(df: DataFrame) -> None:

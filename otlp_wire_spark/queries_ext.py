@@ -1301,7 +1301,7 @@ SQL_IVF_ANN_TOPK = _sql_ivf()
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _fanout(_t(spark, sf_dir, "embeddings"))
     return dedup.embedding_cosine_pairs(emb, threshold=0.45).orderBy("id_a", "id_b")
 
 

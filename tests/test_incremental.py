@@ -14,6 +14,7 @@ from otlp_wire_spark.operators.curate import (
     curation_index,
     incremental_curate,
 )
+from otlp_wire_spark.plans.asserts import plan_nodes
 
 _W = [
     "the", "quick", "brown", "fox", "jumps", "over", "and", "lazy",
@@ -148,6 +149,16 @@ def test_incremental_sig_stage_is_o_new_not_o_corpus(spark):
     assert obs.get["sig_rows"] < len(old_rows) * 4  # ≪ corpus-sized
 
 
+def _scan_roots(df) -> list[str]:
+    """Root path of every file scan in ``df``'s plan, one entry per scan."""
+    roots = []
+    for node in plan_nodes(df):
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths()
+            roots += [paths.apply(i).toUri().getPath() for i in range(paths.size())]
+    return roots
+
+
 def test_incremental_candidates_join_parquet_band_index(spark, tmp_path):
     """End-to-end through an ON-DISK index (the deployment shape): the
     three index tables round-trip parquet, admission joins the stored band
@@ -171,13 +182,13 @@ def test_incremental_candidates_join_parquet_band_index(spark, tmp_path):
         bucket_cap=10_000_000,
         existing_bands=spark.read.parquet(bdir),
     )
-    plan = admitted._jdf.queryExecution().executedPlan().toString()
-    assert "bands" in plan  # the stored band table is in the plan
+    roots = _scan_roots(admitted)
+    assert bdir in roots, roots  # the stored band table is read
     # the corpus shingle index is scanned EXACTLY once (the id_a verify
     # side) — the sh_b side must come from the batch's own shingle table,
     # never a second full index scan (pre-r5-review shape paid one whose
     # old rows the id_b join then discarded)
-    assert plan.count(sdir) == 1, plan
+    assert roots.count(sdir) == 1, roots
     got = {r.doc_id for r in admitted.select("doc_id").collect()}
     want = {
         r.doc_id
