@@ -245,16 +245,28 @@ def generate_lookup(spark: SparkSession) -> DataFrame:
     the reference's context attributes (benchmark_comparison_test.go:520-563
     fixture): some (lang, host) pairs have NO row (left join → NULL ≙
     absent), some have context='' (present-but-empty), the rest a value.
+
+    Built like ``generate_pages``: column expressions over one range
+    partition, so the broadcast side is a codegen'd range scan. A
+    ``createDataFrame(<Python list>)`` here would be a PythonRDD scan that
+    runs Python worker tasks at every action reading the table.
     """
-    rows = []
-    for li, lang in enumerate(LANG_DISTINCT):
-        for hi in range(NUM_HOSTS):
-            if (hi + li) % 7 == 0:
-                continue  # absent row
-            ctx = "" if (hi + li) % 5 == 0 else f"ctx-{lang}-{hi}"
-            rows.append(
-                (lang, f"host{hi}.example.com", f"cat{(hi * 31 + li) % 13}", ctx)
-            )
-    return spark.createDataFrame(
-        rows, "lang string, url_host string, site_category string, context string"
+    idc = _id()
+    li = (idc / NUM_HOSTS).cast("int")
+    hi = (idc % NUM_HOSTS).cast("int")
+    lang = F.element_at(F.array(*[F.lit(x) for x in LANG_DISTINCT]), li + 1)
+    host = hi.cast("string")
+    ctx = F.when((hi + li) % 5 == 0, F.lit("")).otherwise(
+        F.concat(F.lit("ctx-"), lang, F.lit("-"), host)
+    )
+    return (
+        spark.range(len(LANG_DISTINCT) * NUM_HOSTS, numPartitions=1)
+        .where((hi + li) % 7 != 0)  # absent row
+        .select(
+            lang.alias("lang"),
+            F.concat(F.lit("host"), host, F.lit(".example.com")).alias("url_host"),
+            F.concat(F.lit("cat"), ((hi * 31 + li) % 13).cast("string"))
+            .alias("site_category"),
+            ctx.alias("context"),
+        )
     )

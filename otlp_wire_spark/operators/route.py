@@ -2,10 +2,16 @@
 
 Re-expresses the reference's shard/split path (README.md:58-73,
 example_test.go:32-65): extract the routing key, ``FNV-64a(key) % N``,
-hand each group to its worker. In Spark the worker boundary IS the shuffle:
-``repartition(num_shards, 'shard')`` then a partitionBy('shard') sink write,
-so each sink file set is one shard — the ``WriteTo`` re-wrap analog
-(wire.go:356-370) with bytes preserved verbatim in the payload column.
+hand each group to its worker. In Spark that is
+``repartition(num_shards, 'shard')`` then a partitionBy('shard') sink write
+— the ``WriteTo`` re-wrap analog (wire.go:356-370) with bytes preserved
+verbatim in the payload column. The exchange puts all of one shard's rows
+in one task, but it does NOT give each shard its own task: Murmur3 hash
+partitioning sends shard ids 0..7 and the fused path's quarantine shard -1
+to 6 of the 8 post-exchange tasks (shards 1, 3 and 7 share one, shards 2
+and 4 another, two tasks get none — the route benchmark's traced
+``route.task_skew`` of 2.4-2.8). Per-shard sink correctness comes from
+``partitionBy('shard')``, never from the task layout.
 
 Scale notes (100 TB):
 - routed bytes never pass through the driver; the only wide exchange is the
@@ -51,7 +57,16 @@ def route(
     partitions_per_shard: int = 1,
 ) -> DataFrame:
     """Assign shards and co-locate each shard's rows (the explicit
-    repartition-by-shard-key the north_rule mandates).
+    repartition-by-shard-key the north_rule mandates). Each shard's rows
+    meet in one task, but hash partitioning can put several shards in one
+    task and leave others empty (module docstring); the sink write's
+    partitionBy('shard') is what keeps shards apart.
+
+    Not adopted: ``repartitionById(num_shards + 1, shard + 1)`` (one shard
+    per task, pyspark ≥ 4.1) measured no gain on the 60k-page route
+    benchmark, 4-vCPU host: in a same-JVM alternated A/B (8 rounds) a
+    fused run_pipeline call took a median 1.51 s with it against 1.48 s
+    with this hash exchange.
 
     ``partitions_per_shard > 1`` adds a deterministic sub-shard salt to the
     repartition key so sink-write parallelism isn't capped at num_shards

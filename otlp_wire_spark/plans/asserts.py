@@ -33,10 +33,36 @@ def plan_nodes(df: DataFrame) -> Iterator:
             stack += [kids.apply(i) for i in range(kids.size())]
 
 
+def _built_in_python(rdd) -> bool:
+    """True iff ``rdd``'s lineage holds a PythonRDD — rows made by Python
+    workers (``createDataFrame(<Python list>)``, ``rdd.map(<lambda>)``)."""
+    seen, stack = set(), [rdd]
+    while stack:
+        r = stack.pop()
+        if r.id() in seen:
+            continue
+        seen.add(r.id())
+        if r.getClass().getSimpleName() == "PythonRDD":
+            return True
+        deps = r.dependencies()
+        stack += [deps.apply(i).rdd() for i in range(deps.size())]
+    return False
+
+
 def assert_no_python(df: DataFrame) -> None:
-    """Hot paths must be pure JVM — neither Arrow- nor row-Python."""
-    plan = executed_plan(df)
-    assert "EvalPython" not in plan, f"Python evaluation in plan:\n{plan[:2000]}"
+    """Hot paths must be pure JVM, inputs included: no Arrow- or row-Python
+    evaluation node, and no scan of an RDD built in Python (an
+    ``RDDScanExec``, printed ``Scan ExistingRDD``, over a PythonRDD — it
+    runs Python worker tasks at every action that reads it). Scans of
+    JVM-built RDDs, e.g. ``localCheckpoint`` output, pass."""
+    for node in plan_nodes(df):
+        cls = node.getClass().getSimpleName()
+        assert "EvalPython" not in cls, (
+            f"Python evaluation in plan:\n{executed_plan(df)[:2000]}"
+        )
+        assert cls != "RDDScanExec" or not _built_in_python(node.rdd()), (
+            f"scan of a Python-built RDD in plan:\n{executed_plan(df)[:2000]}"
+        )
 
 
 def assert_arrow_only(df: DataFrame) -> None:

@@ -8,6 +8,7 @@ local sandbox:
 - Arrow on (zero-copy into pandas UDFs — the reference's zero-copy
   ``[]byte`` views, docs/DESIGN.md:334-341).
 - shuffle partitions sized from parallelism, not the 200 default.
+- PySpark's per-Column call-site capture off (py4j chatter at plan build).
 """
 
 from __future__ import annotations
@@ -79,6 +80,14 @@ def get_spark(
         # loses operator fusion there). Net loss — left at default; the
         # mega-stage is split surgically instead (parse._pushdown_barrier
         # breaks gen and parse into two JIT-compilable codegen stages).
+        # Per-Column call-site capture off. PySpark wraps every Column
+        # function to record its Python call site (~5 py4j round trips
+        # each, ~1,800 per flagship run_pipeline plan build); the capture
+        # only feeds the DataFrame query context of runtime errors, which
+        # the non-ANSI posture above mostly does not raise. pyspark reads
+        # this flag ONCE per process, at the first Column function call,
+        # from the session active then.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")

@@ -3,8 +3,9 @@
 design-for-100× witness the judge reads next to bench numbers.
 
 Asserts the same budget tests/test_pipeline.py::test_pipeline_plan_shape_budget
-enforces (exactly ONE non-broadcast exchange, zero Python eval nodes, no
-unused extractor regexes), then writes the pretty-printed evidence.
+enforces (exactly ONE non-broadcast exchange, no Python eval node and no
+Python-built RDD scan, no unused extractor regexes), then writes the
+pretty-printed evidence.
 
 Run: python scripts/plan_audit.py
 """
@@ -12,12 +13,12 @@ Run: python scripts/plan_audit.py
 from __future__ import annotations
 
 import os
-import re
 import sys
 from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from otlp_wire_spark.plans.asserts import assert_no_python  # noqa: E402
 from otlp_wire_spark.session import get_spark  # noqa: E402
 
 
@@ -43,9 +44,8 @@ def main() -> None:
     plan = routed._jdf.queryExecution().executedPlan().toString()
 
     n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
-    n_python = len(re.findall(r"BatchEvalPython|ArrowEvalPython", plan))
     assert n_exchanges == 1, f"flagship exchanges != 1:\n{plan}"
-    assert n_python == 0, "flagship plan contains Python eval nodes"
+    assert_no_python(routed)  # the same definition the plan-shape test uses
     # unused-extractor absence is pinned by
     # tests/test_parse.py::test_fields_subset_prunes_unused_scans (the
     # fixture generator legitimately mentions the marker strings, so a
@@ -147,8 +147,9 @@ Regenerated: {datetime.now(timezone.utc).isoformat(timespec="seconds")}
 
 - shuffle exchanges (non-broadcast): **{n_exchanges}** — exactly the mandated
   repartition-by-shard; enrichment is a BroadcastHashJoin.
-- Python evaluation nodes: **{"none" if n_python == 0 else n_python}**
-  — the fields-limited expr parse keeps the hot path pure JVM.
+- Python evaluation nodes and Python-built RDD scans: **none**
+  (`plans.asserts.assert_no_python`) — the fields-limited expr parse keeps
+  the hot path pure JVM, and the lookup dimension is a range scan.
 - unused extractors (attrs/text/trace/ref regexes): absent from the plan
   (fields-limited parse; pinned by test_fields_subset_prunes_unused_scans).
 - route key hashing: the pure-JVM FNV-64a fold (ASCII code-point fold with
@@ -211,8 +212,7 @@ scan count pinned in test_incremental_candidates_join_parquet_band_index).
         "w",
     ) as f:
         f.write(out)
-    print("PLAN_AUDIT.md written;",
-          f"exchanges={n_exchanges} python_nodes={n_python}")
+    print("PLAN_AUDIT.md written;", f"exchanges={n_exchanges} python=none")
     spark.stop()
 
 

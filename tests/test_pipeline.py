@@ -12,7 +12,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from otlp_wire_spark.fixtures import oracle
-from otlp_wire_spark.fixtures.pages import generate_lookup, generate_pages
+from otlp_wire_spark.fixtures.pages import (
+    LANG_DISTINCT,
+    NUM_HOSTS,
+    generate_lookup,
+    generate_pages,
+)
 from otlp_wire_spark.pipeline import run_pipeline
 
 N = 2000
@@ -182,6 +187,38 @@ def test_broadcast_join_in_plan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_lookup_matches_oracle_mirror(spark):
+    """The range-built lookup equals its oracle mirror row for row: absent
+    (lang, host) pairs have no row, '' contexts and site categories match,
+    and the schema is the former createDataFrame DDL
+    ``lang string, url_host string, site_category string, context string``."""
+    lookup = generate_lookup(spark)
+    assert lookup.dtypes == [
+        ("lang", "string"), ("url_host", "string"),
+        ("site_category", "string"), ("context", "string"),
+    ]
+    rows = lookup.collect()
+    assert len(rows) == 594
+    got = {(r.lang, r.url_host): (r.site_category, r.context) for r in rows}
+    assert len(got) == len(rows)
+    for lang in LANG_DISTINCT:
+        for hi in range(NUM_HOSTS):
+            host = f"host{hi}.example.com"
+            assert got.get((lang, host)) == oracle.lookup_context(lang, host), (
+                lang, host,
+            )
+
+
+def test_assert_no_python_flags_python_built_scans(spark):
+    """A scan of rows made in Python fails the gate; a scan of a JVM-built
+    RDD (localCheckpoint output, same RDDScanExec node) passes."""
+    from otlp_wire_spark.plans.asserts import assert_no_python
+
+    with pytest.raises(AssertionError, match="Python-built RDD"):
+        assert_no_python(spark.createDataFrame([(1,)], "a int"))
+    assert_no_python(spark.range(3).localCheckpoint())
 
 
 def test_pipeline_plan_shape_budget(spark):
